@@ -9,7 +9,10 @@ broadcast-or-shuffle hash join").
   vectorized over NumPy arrays. Level 12 ≈ 3-6 km cells.
 - **XYZ**: standard Web-Mercator slippy tiles (z/x/y + quadkey). Exactly
   SQL-expressible (floor/log formulas), so XYZ-keyed operators are DuckDB-oracle
-  checkable end-to-end.
+  checkable end-to-end. This module owns the packed tile key format
+  (``z·2^58 + x·2^29 + y``, zoom 0..29): the operators compute tile indexes
+  and pack, unpack or stride over keys only through :func:`xyz_tile_cols`,
+  :func:`tile_key_col`, :func:`tile_xy_cols` and :data:`TILE_X_STRIDE`.
 - **Hex**: H3-style hexagonal binning. If the real ``h3`` wheel is importable it is
   used (bit-compatible ids for res 7/9); otherwise a deterministic vendored
   fallback bins into a flat-top hex lattice on Web-Mercator meters with
@@ -244,6 +247,11 @@ def s2_parent(cell_id: np.ndarray, level: int) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 MERCATOR_LAT_LIMIT = 85.05112878
+# Packed tile key layout: z·2^58 + x·2^29 + y. This module owns the format; the
+# operators build, unpack and stride over keys only through the names below.
+_TILE_XY_BITS = 29
+TILE_X_STRIDE = 1 << _TILE_XY_BITS
+_TILE_Z_STRIDE = 1 << (2 * _TILE_XY_BITS)
 
 
 def xyz_tile(lat: np.ndarray, lon: np.ndarray, z: int) -> tuple[np.ndarray, np.ndarray]:
@@ -257,12 +265,6 @@ def xyz_tile(lat: np.ndarray, lon: np.ndarray, z: int) -> tuple[np.ndarray, np.n
         (1.0 - np.log(np.tan(lat_rad) + 1.0 / np.cos(lat_rad)) / math.pi) / 2.0 * n
     ).astype(np.int64)
     return np.clip(x, 0, (1 << z) - 1), np.clip(y, 0, (1 << z) - 1)
-
-
-def xyz_tile_key(lat, lon, z: int) -> np.ndarray:
-    """Single int64 key: (z << 58) | (x << 29) | y — join-friendly."""
-    x, y = xyz_tile(lat, lon, z)
-    return (np.int64(z) << np.int64(58)) | (x << np.int64(29)) | y
 
 
 def mercator_unit_cols(lat: Column, lon: Column, z: int) -> tuple[Column, Column]:
@@ -288,8 +290,18 @@ def mercator_unit_cols(lat: Column, lon: Column, z: int) -> tuple[Column, Column
     return u, m
 
 
-def _xyz_cols(lat: Column, lon: Column, z: int) -> tuple[Column, Column]:
-    """(x, y) tile index Columns at zoom z (clamped; pure Catalyst)."""
+def _check_zoom(z: int) -> int:
+    """``z`` if a tile key can hold it: x and y get 29 bits each, so from z30
+    on ``(x, 2^29)`` would pack to the same key as ``(x + 1, 0)``."""
+    if not 0 <= z <= _TILE_XY_BITS:
+        raise ValueError(f"tile zoom {z} outside 0..{_TILE_XY_BITS}")
+    return z
+
+
+def xyz_tile_cols(lat: Column, lon: Column, z: int) -> tuple[Column, Column]:
+    """(x, y) tile index Columns at zoom z (clamped; pure Catalyst). ``x``
+    depends on ``lon`` only and ``y`` on ``lat`` only."""
+    _check_zoom(z)
     u, m = mercator_unit_cols(lat, lon, z)
     x = F.floor(u).cast("long")
     y = F.floor(m).cast("long")
@@ -298,17 +310,33 @@ def _xyz_cols(lat: Column, lon: Column, z: int) -> tuple[Column, Column]:
     return x, y
 
 
+def tile_key_col(x: Column, y: Column, z: int | Column) -> Column:
+    """Pack tile indexes into the BIGINT key ``z·2^58 + x·2^29 + y``; ``z`` is
+    an int or a per-row zoom Column (the adaptive cover)."""
+    zc = z if isinstance(z, Column) else F.lit(_check_zoom(z))
+    return (
+        zc.cast("long") * F.lit(_TILE_Z_STRIDE).cast("long")
+        + x * F.lit(TILE_X_STRIDE).cast("long")
+        + y
+    )
+
+
+def tile_xy_cols(tile: Column) -> tuple[Column, Column]:
+    """Unpack a tile key Column into its (x, y) index Columns."""
+    mask = F.lit(TILE_X_STRIDE - 1).cast("long")
+    return F.shiftright(tile, _TILE_XY_BITS).bitwiseAND(mask), tile.bitwiseAND(mask)
+
+
 def xyz_tile_key_col(lat: Column, lon: Column, z: int) -> Column:
-    """Pure-Catalyst twin of :func:`xyz_tile_key` (stays in codegen; identical
-    formula is used in DuckDB oracle SQL)."""
-    x, y = _xyz_cols(lat, lon, z)
-    return (F.lit(z).cast("long") * F.lit(1 << 58).cast("long")) + (
-        x * F.lit(1 << 29).cast("long")
-    ) + y
+    """The tile key of (lat, lon) at zoom z as pure Catalyst (stays in
+    codegen); :func:`xyz_tile_key_sql` is its DuckDB twin."""
+    x, y = xyz_tile_cols(lat, lon, z)
+    return tile_key_col(x, y, z)
 
 
-def xyz_tile_key_sql(lat_expr: str, lon_expr: str, z: int) -> str:
-    """The same formula as ANSI SQL (DuckDB oracle)."""
+def _xyz_tile_sql(lat_expr: str, lon_expr: str, z: int) -> tuple[str, str]:
+    """:func:`xyz_tile_cols` as ANSI SQL (DuckDB oracle): (x, y) expressions."""
+    _check_zoom(z)
     n = float(1 << z)
     lim = MERCATOR_LAT_LIMIT
     lat_c = f"greatest(least({lat_expr}, {lim}), -{lim})"
@@ -317,7 +345,13 @@ def xyz_tile_key_sql(lat_expr: str, lon_expr: str, z: int) -> str:
         f"least(greatest(cast(floor((1.0 - ln(tan(radians({lat_c})) + 1.0/cos(radians({lat_c}))) / pi()) "
         f"/ 2.0 * {n}) as bigint), 0), {(1 << z) - 1})"
     )
-    return f"(cast({z} as bigint) * {1 << 58} + ({x}) * {1 << 29} + ({y}))"
+    return x, y
+
+
+def xyz_tile_key_sql(lat_expr: str, lon_expr: str, z: int) -> str:
+    """The same formula as ANSI SQL (DuckDB oracle)."""
+    x, y = _xyz_tile_sql(lat_expr, lon_expr, z)
+    return f"(cast({z} as bigint) * {_TILE_Z_STRIDE} + ({x}) * {TILE_X_STRIDE} + ({y}))"
 
 
 def quadkey(x: np.ndarray, y: np.ndarray, z: int) -> np.ndarray:
@@ -342,7 +376,7 @@ def quadkey_col(lat: Column, lon: Column, z: int) -> Column:
     (MSB-first), digit = x_bit + 2·y_bit, looked up from '0123'. Quadkeys carry
     the hierarchical prefix property (parent = prefix), which makes multi-zoom
     rollups plain ``substring`` + groupBy. SQL twin: :func:`quadkey_sql`."""
-    x, y = _xyz_cols(lat, lon, z)
+    x, y = xyz_tile_cols(lat, lon, z)
     digits = []
     for i in range(z, 0, -1):
         mask = 1 << (i - 1)
@@ -356,14 +390,7 @@ def quadkey_col(lat: Column, lon: Column, z: int) -> Column:
 
 def quadkey_sql(lat_expr: str, lon_expr: str, z: int) -> str:
     """The identical quadkey arithmetic as DuckDB SQL."""
-    n = float(1 << z)
-    lim = MERCATOR_LAT_LIMIT
-    lat_c = f"greatest(least({lat_expr}, {lim}), -{lim})"
-    x = f"least(greatest(cast(floor(({lon_expr} + 180.0) / 360.0 * {n}) as bigint), 0), {(1 << z) - 1})"
-    y = (
-        f"least(greatest(cast(floor((1.0 - ln(tan(radians({lat_c})) + 1.0/cos(radians({lat_c}))) / pi()) "
-        f"/ 2.0 * {n}) as bigint), 0), {(1 << z) - 1})"
-    )
+    x, y = _xyz_tile_sql(lat_expr, lon_expr, z)
     parts = []
     for i in range(z, 0, -1):
         mask = 1 << (i - 1)

@@ -4,7 +4,8 @@ This is the engine's centerpiece (BASELINE.json north_star): geocoded points (we
 pages) are joined against OSM polygons via a **cell-keyed equi-join** (XYZ tile keys
 — Catalyst-native, SQL-expressible) with an exact ray-cast **point-in-polygon
 post-filter** evaluated as a higher-order-function expression (whole-stage codegen —
-zero Python in the join path).
+zero Python in the join path). ``functions.cells`` owns the tile index and the
+packed key format; this module only arranges keys into covers.
 
 Scale design:
 - polygons carry their edge arrays; the tile-cover explode keys each polygon into
@@ -26,9 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from openstreetmapio_jl_spark.functions import geo
-from openstreetmapio_jl_spark.functions.cells import MERCATOR_LAT_LIMIT, xyz_tile_key_col
-
-import math
+from openstreetmapio_jl_spark.functions.cells import tile_key_col, xyz_tile_cols, xyz_tile_key_col
 
 
 # ---------------------------------------------------------------------------
@@ -402,58 +401,35 @@ def polygons_with_edges(rings: DataFrame) -> DataFrame:
 # tile cover
 # ---------------------------------------------------------------------------
 
-def _tile_of(lon: Column, z: int) -> Column:
-    n = float(1 << z)
-    return F.greatest(
-        F.least(
-            F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(n)).cast("long"),
-            F.lit((1 << z) - 1),
-        ),
-        F.lit(0),
-    )
-
-
-def _tile_row_of(lat: Column, z: int) -> Column:
-    n = float(1 << z)
-    lat_c = F.greatest(
-        F.least(lat, F.lit(MERCATOR_LAT_LIMIT)), F.lit(-MERCATOR_LAT_LIMIT)
-    )
-    rad = F.radians(lat_c)
-    return F.greatest(
-        F.least(
-            F.floor(
-                (F.lit(1.0) - F.log(F.tan(rad) + F.lit(1.0) / F.cos(rad)) / F.lit(math.pi))
-                / F.lit(2.0)
-                * F.lit(n)
-            ).cast("long"),
-            F.lit((1 << z) - 1),
-        ),
-        F.lit(0),
-    )
-
-
-def tile_key(x: Column, y: Column, z: int) -> Column:
-    return (
-        F.lit(z).cast("long") * F.lit(1 << 58).cast("long")
-        + x * F.lit(1 << 29).cast("long")
-        + y
-    )
-
-
-def tile_key_col(x: Column, y: Column, z: Column) -> Column:
-    """tile_key with a per-row zoom column (adaptive-cover path)."""
-    return (
-        z.cast("long") * F.lit(1 << 58).cast("long")
-        + x * F.lit(1 << 29).cast("long")
-        + y
-    )
-
-
 def _shift_right(col: Column, d: Column) -> Column:
     """col >> d with a COLUMN shift amount (Spark's shiftright needs a literal).
     Exact for tile indexes: values < 2^29 and 2^d are both exactly representable
     as doubles."""
     return F.floor(col / F.pow(F.lit(2.0), d)).cast("long")
+
+
+def _wrapped_cover(
+    x_lo: Column, x_hi: Column, y0: Column, y1: Column,
+    crosses: Column, last: Column, z: int | Column,
+) -> Column:
+    """ARRAY<BIGINT> tile keys at zoom ``z`` of the x-range [x_lo, x_hi] ×
+    y-range [y0, y1]; ``last`` is the highest x at that zoom. A wrapped range
+    (``crosses``) is covered by TWO x-ranges instead of the whole world; wrapped
+    arcs that meet inside one tile column cover the full ring."""
+    xs = (
+        F.when(
+            crosses & (x_lo > x_hi),
+            F.concat(F.sequence(x_lo, last), F.sequence(F.lit(0), x_hi)),
+        )
+        .when(crosses, F.sequence(F.lit(0), last))
+        .otherwise(F.sequence(x_lo, x_hi))
+    )
+    return F.flatten(
+        F.transform(
+            xs,
+            lambda xx: F.transform(F.sequence(y0, y1), lambda yy: tile_key_col(xx, yy, z)),
+        )
+    )
 
 
 def tile_cover_bbox(
@@ -470,27 +446,9 @@ def tile_cover_bbox(
     (plain bbox with lon span > 180°) keeps the single full x-range — the
     old raw-span heuristic covered its complement and silently lost interior
     hits."""
-    n = 1 << z
-    y0 = _tile_row_of(max_lat, z)  # north edge → smaller row
-    y1 = _tile_row_of(min_lat, z)
-    x_lo = _tile_of(min_lon, z)
-    x_hi = _tile_of(max_lon, z)
-    crosses = min_lon > max_lon
-    xs = (
-        F.when(
-            crosses & (x_lo > x_hi),
-            F.concat(F.sequence(x_lo, F.lit(n - 1)), F.sequence(F.lit(0), x_hi)),
-        )
-        # wrapped arcs that meet inside one tile column cover the full ring
-        .when(crosses, F.sequence(F.lit(0), F.lit(n - 1)))
-        .otherwise(F.sequence(x_lo, x_hi))
-    )
-    return F.flatten(
-        F.transform(
-            xs,
-            lambda xx: F.transform(F.sequence(y0, y1), lambda yy: tile_key(xx, yy, z)),
-        )
-    )
+    x_lo, y0 = xyz_tile_cols(max_lat, min_lon, z)  # north edge → smaller row
+    x_hi, y1 = xyz_tile_cols(min_lat, max_lon, z)
+    return _wrapped_cover(x_lo, x_hi, y0, y1, min_lon > max_lon, F.lit((1 << z) - 1), z)
 
 
 def adaptive_cover_cols(
@@ -507,10 +465,8 @@ def adaptive_cover_cols(
     polygons (the overwhelming majority) keep the full-resolution level — their
     candidate sets stay tight."""
     n = 1 << z
-    y0 = _tile_row_of(max_lat, z)
-    y1 = _tile_row_of(min_lat, z)
-    x_lo = _tile_of(min_lon, z)
-    x_hi = _tile_of(max_lon, z)
+    x_lo, y0 = xyz_tile_cols(max_lat, min_lon, z)
+    x_hi, y1 = xyz_tile_cols(min_lat, max_lon, z)
     # wrapped bbox convention (min_lon > max_lon): min = west bound (high x),
     # max = east bound (low x) — same convention as tile_cover_bbox
     crosses = min_lon > max_lon
@@ -525,24 +481,10 @@ def adaptive_cover_cols(
     d = F.least(d, F.lit(z))
     lvl = (F.lit(z) - d).cast("int")
     nl = _shift_right(F.lit(n).cast("long"), d)  # tiles per axis at lvl
-    xl_lo, xl_hi = _shift_right(x_lo, d), _shift_right(x_hi, d)
-    yl0, yl1 = _shift_right(y0, d), _shift_right(y1, d)
-    xs = (
-        F.when(
-            crosses & (xl_lo > xl_hi),
-            F.concat(
-                F.sequence(xl_lo, nl - 1), F.sequence(F.lit(0).cast("long"), xl_hi)
-            ),
-        )
-        # wrapped arcs that merge at this coarse level cover the full ring
-        .when(crosses, F.sequence(F.lit(0).cast("long"), nl - 1))
-        .otherwise(F.sequence(xl_lo, xl_hi))
-    )
-    keys = F.flatten(
-        F.transform(
-            xs,
-            lambda xx: F.transform(F.sequence(yl0, yl1), lambda yy: tile_key_col(xx, yy, lvl)),
-        )
+    keys = _wrapped_cover(
+        _shift_right(x_lo, d), _shift_right(x_hi, d),
+        _shift_right(y0, d), _shift_right(y1, d),
+        crosses, nl - 1, lvl,
     )
     return lvl, keys
 
@@ -620,8 +562,7 @@ def point_in_polygon_join(
         # distinct levels as a lazy broadcast frame (≤ zoom+1 rows), NOT a
         # collect during plan build: constructing the join must be action-free
         levels_df = with_lvl.select("_lvl").distinct()
-        x13 = _tile_of(lon, zoom)
-        y13 = _tile_row_of(lat, zoom)
+        x13, y13 = xyz_tile_cols(lat, lon, zoom)
         d = F.lit(zoom) - F.col("_lvl")
         pts = (
             points.crossJoin(F.broadcast(levels_df))

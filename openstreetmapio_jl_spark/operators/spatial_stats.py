@@ -9,7 +9,7 @@ tile from a genuinely clustered hot region.
 
 Scale shape: everything is tiles-sized, never points-sized. The neighbor
 sum is the same bounded delta-explode equi-join the grid clusterer uses
-(the XYZ key packs (z, x, y) as ``z·2^58 + x·2^29 + y``, so the 3×3
+(``functions.cells`` packs (z, x, y) as ``z·2^58 + x·2^29 + y``, so the 3×3
 neighborhood is 9 constant key deltas — ≤9 edges per tile, no spatial
 cross-join); global moments are ONE one-row aggregate broadcast back.
 
@@ -40,8 +40,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# the 3x3 neighborhood INCLUDING self, as XYZ-key deltas (x stride 2^29)
-GI_DELTAS = [dx * (1 << 29) + dy for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
+from openstreetmapio_jl_spark.functions.cells import TILE_X_STRIDE
+
+# the 3x3 neighborhood INCLUDING self, as XYZ-key deltas
+GI_DELTAS = [dx * TILE_X_STRIDE + dy for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
 
 
 def gi_star(tile_counts: DataFrame, *, key_col: str = "tile", x_col: str = "n") -> DataFrame:
